@@ -20,7 +20,6 @@ the per-layer ones. Environment:
     SPARK_GRAFT_SF_DIR   fixture tables (default: ~/testdata/sf0.1, the tree
                          graft.Bench reads)
     PERFBENCH_CPUS       cores for local[n] (default: all)
-    PERFBENCH_KEEP=1     keep the run's work dir under .bench_build/runs
 """
 import argparse
 import fcntl
@@ -199,16 +198,15 @@ def end_to_end(result):
     return {
         "setup_s": statistics.median(result["setup_s"]),
         "unit_s.p50": statistics.median(u["ms"] for u in result["units"]) / 1e3,
-        "items_per_s": result["extra"].get("items", 0.0) / result["window_s"],
-        "mem.rss_peak_mb": result["rss_peak_mb"],
     }
 
 
 def per_layer(result):
     m = dict(result.get("layers", {}))
-    m.update({k: v for k, v in result["extra"].items() if k != "items"})
+    m.update(result["extra"])
     m["warmup_s"] = result["warmup_s"]
     m["session_s"] = result["session_s"]
+    m["mem.rss_peak_mb"] = result["rss_peak_mb"]
     return m
 
 
@@ -280,6 +278,8 @@ def main():
                 print(f"[perfbench] self_ms {k:40s} {v:12.1f}", file=sys.stderr)
         else:
             values = end_to_end(result)
+        print("[perfbench] unit ms: " + " ".join(f"{u['ms']:.0f}" for u in result["units"]),
+              file=sys.stderr)
         metrics = {m["name"]: {"value": float(values.get(m["name"], 0.0)),
                                "unit": m["unit"]} for m in wanted}
         attempted = len(result["ops"]) + len(checks)
@@ -287,8 +287,7 @@ def main():
                           "failed": len(bad), "metrics": metrics}))
         return 0 if not bad else 1
     finally:
-        if os.environ.get("PERFBENCH_KEEP") != "1":
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

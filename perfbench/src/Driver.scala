@@ -54,8 +54,8 @@ object Driver {
     ctx.sessionS = (System.nanoTime() - t0) / 1e9
     val ok = try {
       args.workload match {
-        case "daily_etl" => Workloads.dailyEtl(ctx)
-        case "llm_stream_dedup" => Workloads.streamDedup(ctx)
+        case "daily_etl_bi" => Workloads.dailyEtlBi(ctx)
+        case "llm_ops" => Workloads.llmOps(ctx)
         case w => throw new IllegalArgumentException(s"unknown workload $w")
       }
       true
@@ -114,10 +114,10 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
   var rssPeakMb = 0.0
   val setupS = ArrayBuffer.empty[Double]
   var warmupS = 0.0
-  var windowS = 0.0
   /** (name, ms) per timed engine call. */
   val ops = ArrayBuffer.empty[(String, Double)]
-  /** (ms, traced) per unit of work: an ETL day or a stream pass. */
+  /** (ms, traced) per unit of work: a day of loads and refreshes, or an
+    * operator pass. */
   val units = ArrayBuffer.empty[(Double, Boolean)]
   val checks = ArrayBuffer.empty[(String, Boolean, String)]
   /** (name, oracle SQL over the fixture tables, engine output parquet). */
@@ -153,9 +153,7 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
     if (args.trace) spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
 
   private var codegen0 = (0L, 0L)
-  private def codegenNow = (
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-    CodeGenerator.compileTime)
+  private def codegenNow = (Ctx.compiles, CodeGenerator.compileTime)
 
   /** Time one engine call; inside a traced unit it also becomes a span. */
   def span[A](name: String, layer: String)(body: => A): A = {
@@ -166,8 +164,7 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
   }
 
   /** One unit of work in the timed loop; under `--trace 1` every second
-    * unit is traced, so traced and untraced walls come from one run and
-    * each traced unit sits between two untraced ones.
+    * unit is traced, so traced and untraced walls come from one run.
     */
   def unit(body: => Unit): Unit = {
     val traced = args.trace && nextUnit % 2 == 1
@@ -192,10 +189,18 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
     }
   }
 
-  /** A timed engine operation inside a unit. */
-  def op[A](name: String, kind: String)(body: => A): A = {
+  /** Name the Spark jobs and result bytes of a traced call get billed to. */
+  @volatile var callTag: String = null
+
+  /** A timed engine operation inside a unit. With `perCall`, a traced
+    * call also counts its own Spark jobs and result bytes
+    * (`<name>.jobs`, `<name>.result_bytes`).
+    */
+  def op[A](name: String, kind: String, perCall: Boolean = false)(body: => A): A = {
+    val tag = perCall && tracing
+    if (tag) { drain(); callTag = name }
     val t0 = System.nanoTime()
-    val r = span(name, kind)(body)
+    val r = try span(name, kind)(body) finally if (tag) { drain(); callTag = null }
     ops += ((name, (System.nanoTime() - t0) / 1e6))
     r
   }
@@ -211,14 +216,13 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
   }
 
   /** Closed loop: run units until `--seconds` have passed (whole units
-    * only); a traced run needs at least untraced, traced, untraced.
+    * only); a traced run needs at least one untraced and one traced unit.
     */
   def loop(body: => Unit): Unit = {
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
     while (units.isEmpty || elapsed < args.seconds ||
-           (args.trace && units.size < 3)) unit(body)
-    windowS = elapsed
+           (args.trace && units.size < 2)) unit(body)
   }
 
   def check(name: String, ok: Boolean, detail: String = ""): Unit = {
@@ -241,7 +245,7 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
     val result = mutable.LinkedHashMap[String, Any](
       "workload" -> args.workload, "seed" -> args.seed,
       "session_s" -> sessionS, "setup_s" -> setupS, "warmup_s" -> warmupS,
-      "window_s" -> windowS, "rss_peak_mb" -> rssPeakMb,
+      "rss_peak_mb" -> rssPeakMb,
       "units" -> units.map { case (ms, tr) => Map("ms" -> ms, "traced" -> tr) },
       "ops" -> ops.map { case (n, ms) => Map("name" -> n, "ms" -> ms) },
       "checks" -> checks.map { case (n, ok, d) =>
@@ -261,6 +265,9 @@ final class Ctx(val spark: SparkSession, val args: Driver.Args) {
 
 object Ctx {
   val json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Whole-stage and expression classes compiled so far in this JVM. */
+  def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
 
 /** Spark-side events of traced units: job spans, task totals, Catalyst
@@ -270,7 +277,12 @@ final class TraceListener(ctx: Ctx) extends SparkListener {
   private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
-    if (ctx.tracing) { jobStart.put(e.jobId, e.time); ctx.add("spark.jobs", 1) }
+    if (ctx.tracing) {
+      jobStart.put(e.jobId, e.time)
+      ctx.add("spark.jobs", 1)
+      val tag = ctx.callTag
+      if (tag != null) ctx.add(s"$tag.jobs", 1)
+    }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = {
     val s = jobStart.remove(e.jobId)
@@ -298,6 +310,8 @@ final class TraceListener(ctx: Ctx) extends SparkListener {
         m.shuffleWriteMetrics.bytesWritten).toDouble)
       ctx.add("spark.spill_bytes", (m.memoryBytesSpilled + m.diskBytesSpilled).toDouble)
       ctx.add("spark.result_bytes", m.resultSize.toDouble)
+      val tag = ctx.callTag
+      if (tag != null) ctx.add(s"$tag.result_bytes", m.resultSize.toDouble)
     }
   }
 

@@ -1,12 +1,14 @@
 package org.apache.spark.sql.perfbench
 
 import java.io.File
+import java.sql.{Connection, DriverManager}
 
 import scala.collection.mutable
 
 import graft.SparkEntry
 import graft.pipeline.{CurationJob, Extract, Load, Schema, Transform}
 import graft.queries.PipelineOps
+import graft.server.SqlEndpoint
 import graft.sources.CsvTables
 import graft.streaming.{MinHashDedupStream, SpanDedupStream}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
@@ -14,24 +16,33 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The workloads. Each one: set up three times (for a median), run a
+/** The workloads. Each one: set up several times (for a median), run a
   * closed loop with one client, then check its outputs. The seed only
-  * reorders or partitions inputs derived from the fixture tables.
+  * reorders or partitions inputs derived from the fixture tables, or
+  * reorders the calls of a unit.
   */
 object Workloads {
 
-  // ---- daily_etl ------------------------------------------------------------
+  // ---- daily_etl_bi ---------------------------------------------------------
 
-  /** Days run before timing: per-day wall still falls by a quarter over
+  /** Days run before timing: a day's wall still falls by a fifth over
     * the first few days of a fresh JVM (JIT), then flattens.
     */
-  private val WarmupDays = 6
+  private val WarmupDays = 2
 
-  /** The reference's daily DAG: per run date, extract a seeded 1,000–1,600
-    * row slice of the raw postings, land it as CSV, then transform+load
-    * it incrementally behind the loaded-files tracker.
+  /** The dashboard page a BI client refreshes after each day's load: q01–q27
+    * views of four shapes (top-1, semi-join, window, aggregate).
     */
-  def dailyEtl(ctx: Ctx): Unit = {
+  private val DashboardPage: Seq[String] =
+    Seq("q09_top_nation", "q13_semi_join", "q22_running_totals", "q05_priority_share")
+
+  /** The reference's daily cycle: per run date, extract a seeded
+    * 1,000–1,600 row slice of the raw postings, land it as CSV,
+    * transform+load it incrementally behind the loaded-files tracker,
+    * then refresh one dashboard page over one hive-jdbc connection to
+    * the engine's SQL endpoint.
+    */
+  def dailyEtlBi(ctx: Ctx): Unit = {
     val spark = ctx.spark
     val fx = ctx.args.fixtures
     val seed = ctx.args.seed
@@ -67,10 +78,10 @@ object Workloads {
     def runDay(d: (String, Long, Long)): Seq[String] = {
       val (date, lo, hi) = d
       val slice = raw.where(col("__rid") > lo && col("__rid") <= hi).drop("__rid")
-      val extracted = ctx.span("pipeline.Extract.run", "pipeline.Extract")(
+      val extracted = ctx.op("pipeline.Extract.run", "pipeline.Extract")(
         Extract.run(kaggle = slice, huggingFace = slice.where(lit(false)),
           runDate = date, descriptionCol = Some("description")))
-      ctx.span("sources.CsvTables.write", "sources.CsvTables")(
+      ctx.op("sources.CsvTables.write", "sources.CsvTables")(
         CsvTables.write(extracted, s"$landing/fetch_jobs_$date.csv"))
       val files = Option(new File(landing).list()).map(_.toSeq.sorted)
         .getOrElse(Seq.empty)
@@ -83,7 +94,7 @@ object Workloads {
         if (ctx.tracing) ctx.spans.add(Span(phase, "pipeline.Load", since, now, ctx.unitId))
         phase = next; since = now
       }
-      ctx.span("pipeline.Load.loadIncremental", "pipeline.Load") {
+      ctx.op("pipeline.Load.loadIncremental", "pipeline.Load") {
         val loaded = Load.loadIncremental(spark, files, tracker,
           process = f => {
             switch("pipeline.Transform.process")
@@ -102,73 +113,160 @@ object Workloads {
       }
     }
 
-    def storeRows(): Long =
-      if (new File(store).exists()) spark.read.parquet(store).count() else 0L
-    val wrongLoads = mutable.ArrayBuffer.empty[String]
-    def expectOne(d: (String, Long, Long), loaded: Seq[String]): Unit =
-      if (loaded != Seq(s"fetch_jobs_${d._1}.csv"))
-        wrongLoads += s"${d._1} loaded [${loaded.mkString(",")}]"
-
-    ctx.warmup {
-      for (_ <- 1 to WarmupDays) { val d = newDay(); expectOne(d, runDay(d)) }
-    }
-    val before = storeRows()
-    ctx.loop {
-      val d = newDay()
-      expectOne(d, ctx.op("etl.day", "etl")(runDay(d)))
-    }
-    ctx.extra("items") = (storeRows() - before).toDouble
-    ctx.extra("etl.days") = ctx.ops.size.toDouble
-    ctx.check("each date loads exactly its one file", wrongLoads.isEmpty,
-      wrongLoads.mkString("; "))
-
-    // the DAG retry: an earlier date re-runs end to end and loads nothing
-    val retry = days(rng.nextInt(days.size))
     val t0 = System.nanoTime()
-    val again = runDay(retry)
-    ctx.extra("etl.retry_ms") = (System.nanoTime() - t0) / 1e6
-    ctx.check(s"retry of ${retry._1} loads nothing", again.isEmpty, again.mkString(","))
-    val tracked = spark.read.parquet(tracker).groupBy("file_name").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val landed = days.map(d => s"fetch_jobs_${d._1}.csv").toSet
-    ctx.check("tracker lists each landed file once",
-      tracked.keySet == landed && tracked.values.forall(_ == 1L),
-      s"tracked=${tracked.size} landed=${landed.size}")
-    ctx.extra("pipeline.Load.store_files") =
-      Option(new File(store).listFiles()).map(_.count(_.getName.endsWith(".parquet")))
-        .getOrElse(0).toDouble
+    val port = freePort()
+    val server = SqlEndpoint.start(spark, fx, port)
+    val conn = connect(port)
+    ctx.extra("server.start_s") = (System.nanoTime() - t0) / 1e9
+    val fetched = mutable.Map.empty[String, Long]
+    try {
+      // one page refresh: every view in a seeded order, each read to its
+      // last row through the client
+      def refresh(): Unit = rng.shuffle(DashboardPage).foreach { v =>
+        val cg0 = Ctx.compiles
+        val n = ctx.op(s"server.$v", "graft.server") {
+          val st = conn.createStatement()
+          try {
+            val rs = ctx.span("server.exec", "graft.server")(
+              st.executeQuery(s"SELECT * FROM global_temp.$v"))
+            ctx.span("server.fetch", "graft.server") {
+              val cols = rs.getMetaData.getColumnCount
+              var rows = 0L
+              while (rs.next()) {
+                var i = 1
+                while (i <= cols) { rs.getObject(i); i += 1 }
+                rows += 1
+              }
+              rows
+            }
+          } finally st.close()
+        }
+        fetched(v) = n
+        if (ctx.tracing) {
+          ctx.add("server.rows_fetched", n.toDouble)
+          ctx.add("server.codegen_compiles", (Ctx.compiles - cg0).toDouble)
+        }
+      }
+      val wrongLoads = mutable.ArrayBuffer.empty[String]
+      def day(): Unit = {
+        val d = newDay()
+        val loaded = runDay(d)
+        if (loaded != Seq(s"fetch_jobs_${d._1}.csv"))
+          wrongLoads += s"${d._1} loaded [${loaded.mkString(",")}]"
+        refresh()
+      }
+      ctx.warmup { for (_ <- 1 to WarmupDays) day() }
+      ctx.loop(day())
+      ctx.extra("etl.days") = ctx.units.size.toDouble
+      ctx.check("each date loads exactly its one file", wrongLoads.isEmpty,
+        wrongLoads.mkString("; "))
+
+      // the DAG retry: an earlier date re-runs end to end and loads nothing
+      val retry = days(rng.nextInt(days.size))
+      val r0 = System.nanoTime()
+      val again = runDay(retry)
+      ctx.extra("etl.retry_ms") = (System.nanoTime() - r0) / 1e6
+      ctx.check(s"retry of ${retry._1} loads nothing", again.isEmpty, again.mkString(","))
+      val tracked = spark.read.parquet(tracker).groupBy("file_name").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val landed = days.map(d => s"fetch_jobs_${d._1}.csv").toSet
+      ctx.check("tracker lists each landed file once",
+        tracked.keySet == landed && tracked.values.forall(_ == 1L),
+        s"tracked=${tracked.size} landed=${landed.size}")
+      ctx.extra("pipeline.Load.store_files") =
+        Option(new File(store).listFiles()).map(_.count(_.getName.endsWith(".parquet")))
+          .getOrElse(0).toDouble
+
+      // the page as the engine computes it is DuckDB-oracle checked, and
+      // the client must read the same rows over the connection
+      val oracleSql = SparkEntry.oracleSql
+      def text(vals: Seq[Any]): String = vals.map(String.valueOf).mkString("|")
+      DashboardPage.foreach { v =>
+        val df = spark.table(s"global_temp.$v")
+        val rows = df.collect()
+        val st = conn.createStatement()
+        val client = try {
+          val rs = st.executeQuery(s"SELECT * FROM global_temp.$v")
+          val cols = rs.getMetaData.getColumnCount
+          val out = mutable.ArrayBuffer.empty[String]
+          while (rs.next()) out += text((1 to cols).map(rs.getObject))
+          out.sorted
+        } finally st.close()
+        val engine = rows.map(r => text(r.toSeq)).toSeq.sorted
+        ctx.check(s"jdbc rows of $v", client == engine && fetched.get(v).contains(
+          engine.size.toLong), s"client ${client.take(2)} engine ${engine.take(2)}")
+        val out = s"${ctx.dir("oracle")}/$v"
+        ctx.dumpRows(rows, df.schema, out)
+        ctx.oracleCheck(v, oracleSql(v), out)
+      }
+    } finally {
+      // client first, then the thrift server, and only then the session:
+      // a server stopped after its session waits out a 60 s pool shutdown
+      conn.close()
+      server.stop()
+    }
   }
 
-  // ---- llm_stream_dedup -----------------------------------------------------
+  private def freePort(): Int = {
+    val ss = new java.net.ServerSocket(0)
+    try ss.getLocalPort finally ss.close()
+  }
+
+  /** The thrift server binds asynchronously: retry the connect briefly. */
+  private def connect(port: Int): Connection = {
+    Class.forName("org.apache.hive.jdbc.HiveDriver")
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var conn: Connection = null
+    while (conn == null) {
+      try conn = DriverManager.getConnection(s"jdbc:hive2://localhost:$port/",
+        "anonymous", "")
+      catch {
+        case e: java.sql.SQLException =>
+          if (System.nanoTime() > deadline) throw e
+          Thread.sleep(200)
+      }
+    }
+    conn
+  }
+
+  // ---- llm_ops --------------------------------------------------------------
 
   /** Arrival files per stream: two micro-batches, so the second batch
     * reads back the state the first one wrote.
     */
   private val StreamFiles = 2
 
-  /** The north-star operators over the documents corpus, one pass per
-    * unit: the q134 MinHash+CC stream and the q101 span dedup stream as
-    * AvailableNow drains of the staged arrival files, then the curation
-    * job.
+  /** Batch-operator registry rows run after the streams, one per operator
+    * family no other call here reaches: PageRank, triangles, BPE, MMR and
+    * IVF ANN.
     */
-  def streamDedup(ctx: Ctx): Unit = {
+  private val BatchRows: Seq[String] = Seq("q130_pagerank", "q131_triangle_stats",
+    "q99_bpe_merges", "q110_mmr_select", "q86_ivf_seeded_ann")
+
+  /** The north-star operators over the documents corpus, one pass per
+    * unit: the q134 MinHash+CC stream and the q101 span-dedup stream as
+    * AvailableNow drains of the staged arrival files, the curation job,
+    * then the batch-operator rows in a seeded order.
+    */
+  def llmOps(ctx: Ctx): Unit = {
     val spark = ctx.spark
     val fx = ctx.args.fixtures
     val docs = graft.Tables.documents(spark, fx)
     var input = ""
-    for (rep <- 1 to 3) ctx.setupRep {
+    // five reps, not three: a warm staging takes well under a second, so
+    // the median needs more than two warm reps to be steady
+    for (rep <- 1 to 5) ctx.setupRep {
       input = ctx.dir(s"stream/input_$rep")
-      stageArrivals(ctx, docs, input, StreamFiles)
+      SpanDedupStream.stageSplits(spark, docs, input, StreamFiles)
     }
-    val nDocs = docs.count()
+    val rows = new scala.util.Random(ctx.args.seed).shuffle(BatchRows)
     var drains = 0
     def fresh(): String = { drains += 1; ctx.dir(s"stream/run_$drains") }
     type Result = (Array[Row], StructType)
     def collected(df: DataFrame): Result = (df.collect(), df.schema)
-    val results = mutable.Map.empty[String, Result]
+    val results = mutable.LinkedHashMap.empty[String, Result]
     var lastDirs = Seq.empty[String]
     var report: graft.pipeline.CurationReport = null
-    var streamed = 0L
     def pass(): Unit = {
       val (mh, sp) = (fresh(), fresh())
       lastDirs = Seq(mh, sp)
@@ -178,17 +276,23 @@ object Workloads {
         "streaming")(collected(SpanDedupStream.run(spark, input, sp, w = 8)))
       report = ctx.op("pipeline.CurationJob", "pipeline.CurationJob")(
         CurationJob.run(spark, fx, fresh()))
+      rows.foreach { q =>
+        results(q) = ctx.op(s"ops.$q", "graft.ops", perCall = true)(
+          collected(SparkEntry.queries(q)(spark, fx)))
+        // as graft.Bench does between rows: rows share no cached state
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      }
     }
     // The timed pass is the JVM's first: a scheduled AvailableNow drain
     // pays class loading and JIT on every run. A traced run warms up one
     // pass, so its traced and untraced passes are both warm and compare.
     if (ctx.args.trace) ctx.warmup(pass())
-    ctx.loop { pass(); streamed += 2 * nDocs }
-    ctx.extra("items") = streamed.toDouble
+    ctx.loop(pass())
     val oracleSql = SparkEntry.oracleSql
-    results.foreach { case (q, (rows, schema)) =>
+    results.foreach { case (q, (rs, schema)) =>
       val out = s"${ctx.dir("oracle")}/$q"
-      ctx.dumpRows(rows, schema, out)
+      ctx.dumpRows(rs, schema, out)
       ctx.oracleCheck(q, oracleSql(q), out)
     }
     val got = Seq(report.n_input, report.n_quality_kept, report.n_ppl_kept,
@@ -201,43 +305,11 @@ object Workloads {
     ctx.extra("stream.store_bytes") = stores.map(_.length).sum.toDouble
   }
 
-  /** Stage `docs` as `k` arrival files, oldest first by modification time
-    * (the order the file source replays). Files hold consecutive doc_id
-    * ranges, because both streams treat the store as the docs that came
-    * before the batch in doc_id order; the seed moves each cut by up to a
-    * tenth of a file.
-    */
-  private def stageArrivals(ctx: Ctx, docs: DataFrame, dir: String, k: Int): Unit = {
-    val rng = new scala.util.Random(ctx.args.seed)
-    val b = docs.agg(min("doc_id"), max("doc_id")).collect().head
-    val (lo, hi) = (b.getLong(0), b.getLong(1) + 1)
-    val width = (hi - lo).toDouble / k
-    val cuts = (1 until k).map(i => lo + ((i + (rng.nextDouble() - 0.5) / 5) * width).toLong)
-    val split = cuts.map(c => (col("doc_id") >= c).cast("int"))
-      .foldLeft(lit(0))(_ + _)
-    val tmp = s"$dir/_stage"
-    docs.withColumn("split", split)
-      .repartition(col("split"))
-      .write.mode(SaveMode.Overwrite).partitionBy("split").parquet(tmp)
-    for (i <- 0 until k) {
-      val part = new File(s"$tmp/split=$i").listFiles().find(_.getName.endsWith(".parquet")).get
-      val dest = new File(dir, f"split_$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      require(dest.setLastModified(1000000L + i * 60000L), s"cannot order $dest")
-    }
-    deleteTree(new File(tmp))
-  }
-
   /** The parquet files of a stream's state: everything but its checkpoint. */
   private def storeFiles(dir: String): Seq[File] = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
     walk(new File(dir)).filterNot(_.getPath.contains("/ckpt/"))
       .filter(_.getName.endsWith(".parquet"))
-  }
-
-  private def deleteTree(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
-    f.delete(); ()
   }
 }
