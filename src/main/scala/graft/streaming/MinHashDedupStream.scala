@@ -4,7 +4,6 @@ import graft.functions.ShingleKernel.{minhashSig, shinglePacks}
 import graft.pipeline.Load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Continuous-ingestion MinHash+LSH near-dup dedup (q129): documents
@@ -15,15 +14,19 @@ import org.apache.spark.sql.types._
   * prefixes), span (q101), sketch (q109/q123/q125), index (q111) and
   * now near-dup text dedup all have continuous forms.
   *
-  * Semantics: a doc is a duplicate iff some PRIOR doc (any earlier
-  * arrival, kept or dropped itself) bands with it and rescores at
-  * jac >= 0.8. Deduping against all priors rather than against
-  * kept-only makes the answer order-independent per doc and
+  * Semantics: a doc is a duplicate iff some PRIOR doc (kept or dropped
+  * itself) bands with it and rescores at jac >= 0.8. Prior means
+  * earlier arrival: any doc of an earlier micro-batch, whatever its
+  * id, or a lower-id doc of the same micro-batch. Deduping against all
+  * priors rather than against kept-only makes the answer
   * NON-RECURSIVE — so with arrival staged in doc_id order the whole
   * stream replays as one DuckDB query over the q70 pair set
   * (TextOps.minhashDedupOracleSql), checking cross-batch store state
   * end to end. (Kept-only dedup would be a sequential greedy chain —
-  * the natural SPEC check, but no closed-form oracle.)
+  * the natural SPEC check, but no closed-form oracle.) Every
+  * near-dup pair is confirmed exactly once, by whichever of its docs
+  * arrives later, so the pair set — and the q134 labels folded from
+  * it — does not depend on arrival order at all.
   *
   * State lives OUTSIDE the streaming state store (the q101 decision:
   * band and shingle identity is append-only and unbounded — per-key
@@ -60,11 +63,6 @@ object MinHashDedupStream {
   private val NumBands = 8
   private val BandSize = 4
 
-  /** Store size above which a batch pays the bucket-list job to
-    * partition-prune its probes; below it a full scan is cheaper.
-    */
-  private val PruneThresholdBytes = 64L * 1024 * 1024
-
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       schema)
@@ -77,10 +75,6 @@ object MinHashDedupStream {
   private val packSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("pack", LongType)))
 
-  /** Run the incremental near-dup dedup over staged splits to
-    * completion (one micro-batch per file) and return the accumulated
-    * per-doc verdicts `(doc_id, n_dup_prior, kept)`.
-    */
   /** Post-run store-size report (stderr): the scale-rung evidence that
     * the band/pack/label stores grow with the corpus, not with batch
     * count — pathology here (store ≫ input) would mean the `batch=`
@@ -94,11 +88,15 @@ object MinHashDedupStream {
     System.err.println(s"[$tag] storeBytes ${sizes.mkString(" ")}")
   }
 
+  /** Run the incremental near-dup dedup over staged splits to
+    * completion (one micro-batch per file) and return the accumulated
+    * per-doc verdicts `(doc_id, n_dup_prior, kept)`.
+    */
   def run(spark: SparkSession, inputDir: String, workDir: String,
           nBuckets: Int = 16,
-          pruneThresholdBytes: Long = PruneThresholdBytes): DataFrame = {
-    runStream(spark, inputDir, workDir, nBuckets, pruneThresholdBytes,
-      foldCc = false)
+          pruneThresholdBytes: Long = StreamRunner.SmallBytes): DataFrame = {
+    StreamRunner.drain(spark, inputDir, workDir)(
+      processBatch(spark, _, _, workDir, nBuckets, pruneThresholdBytes))
     reportStores(spark, workDir, "q129")
     spark.read.parquet(s"$workDir/out")
       .select(col("doc_id"), col("n_dup_prior"), col("kept"))
@@ -114,10 +112,11 @@ object MinHashDedupStream {
     */
   def runClusters(spark: SparkSession, inputDir: String, workDir: String,
                   nBuckets: Int = 16,
-                  pruneThresholdBytes: Long = PruneThresholdBytes)
+                  pruneThresholdBytes: Long = StreamRunner.SmallBytes)
       : DataFrame = {
-    runStream(spark, inputDir, workDir, nBuckets, pruneThresholdBytes,
-      foldCc = true)
+    StreamRunner.drain(spark, inputDir, workDir)(
+      processBatch(spark, _, _, workDir, nBuckets, pruneThresholdBytes,
+        foldCc = true))
     reportStores(spark, workDir, "q134")
     val last = new java.io.File(s"$workDir/labels").listFiles()
       .map(_.getName).filter(_.startsWith("batch="))
@@ -126,24 +125,6 @@ object MinHashDedupStream {
       .select(col("node").cast("long").as("doc_id"),
         col("cluster_rep").cast("long").as("cluster_rep"))
       .orderBy("doc_id")
-  }
-
-  private def runStream(spark: SparkSession, inputDir: String,
-                        workDir: String, nBuckets: Int,
-                        pruneThresholdBytes: Long, foldCc: Boolean): Unit = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        processBatch(spark, batch0, batchId, workDir, nBuckets,
-          pruneThresholdBytes, foldCc)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** One micro-batch of the incremental near-dup dedup — the
@@ -170,7 +151,7 @@ object MinHashDedupStream {
     val smallStores =
       Load.storeBytes(spark, bandStoreDir) < pruneThresholdBytes &&
         Load.storeBytes(spark, packStoreDir) < pruneThresholdBytes
-    BatchTuning.withNarrowShufflesOn(Seq(spark, batch0.sparkSession), narrow = smallStores) {
+    StreamRunner.narrowed(spark, batch0, narrow = smallStores) {
     // per-doc shingle packs and banded signature, one codegen'd
     // kernel pass (the q70 shape); docs under 3 tokens have no
     // shingles and band with nothing
@@ -196,7 +177,7 @@ object MinHashDedupStream {
       .select(col("doc_id"), explode(col("packs")).as("pack"))
 
     // candidate partners: history (pruned band-store probe) plus
-    // earlier docs of the same batch. Missing store = first batch;
+    // lower-id docs of the same batch. Missing store = first batch;
     // a read error on an existing store must fail the batch, and
     // the batch's own partition is excluded so a retry probes the
     // pre-batch state (Load.readStoreExcludingBatch contract).
@@ -215,16 +196,18 @@ object MinHashDedupStream {
         bands.select(bandBucket.as("bucket")).distinct()
           .collect().map(_.getInt(0)).toSeq))
     // ONE join covers both candidate classes: the probe side is
-    // history ∪ this batch, the build side is the batch alone, and
-    // the `x.doc_id < y.doc_id` predicate is exactly the "prior
-    // doc" rule for both (store docs all precede the batch under
-    // doc_id-ordered arrival; same-batch pairs order by id)
-    val cand = storeBands.unionByName(bands.select(
-        col("doc_id"), col("n"), col("band"), col("key")))
+    // history ∪ this batch, tagged `hist`, the build side is the batch
+    // alone. A history doc arrived earlier whatever its id, so it pairs
+    // with every batch doc; a same-batch doc is prior only when its id
+    // is lower. (An id-only rule would drop every pair whose
+    // earlier-arrived doc has the higher id.)
+    val cand = storeBands.withColumn("hist", lit(true))
+      .unionByName(bands.select(col("doc_id"), col("n"), col("band"),
+        col("key"), lit(false).as("hist")))
       .as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
+          (col("x.hist") || col("x.doc_id") < col("y.doc_id")))
       .select(col("x.doc_id").as("da"), col("x.n").as("na"),
         col("y.doc_id").as("db"), col("y.n").as("nb"))
       .distinct()
@@ -342,26 +325,18 @@ object MinHashDedupStream {
   }
 
   /** Stage + run in a fresh work dir: the q129 entry. Arrival order is
-    * staged to doc_id order (SpanDedupStream.stageSplits), which is
+    * staged to doc_id order (StreamRunner.stageSplits), which is
     * what lets the stream share the batch oracle.
     */
   def runOn(spark: SparkSession, docs: DataFrame, nSplits: Int,
-            pruneThresholdBytes: Long = PruneThresholdBytes): DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q129_minhash_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    run(spark, s"$workDir/input", workDir,
-      pruneThresholdBytes = pruneThresholdBytes)
-  }
+            pruneThresholdBytes: Long = StreamRunner.SmallBytes): DataFrame =
+    StreamRunner.runOn(spark, docs, nSplits, "q129_minhash_stream")(
+      run(spark, _, _, pruneThresholdBytes = pruneThresholdBytes))
 
   /** Stage + run with the CC fold: the q134 entry. */
   def runClustersOn(spark: SparkSession, docs: DataFrame, nSplits: Int,
-                    pruneThresholdBytes: Long = PruneThresholdBytes)
-      : DataFrame = {
-    val workDir = java.nio.file.Files
-      .createTempDirectory("q134_inc_cc_stream").toString
-    SpanDedupStream.stageSplits(spark, docs, s"$workDir/input", nSplits)
-    runClusters(spark, s"$workDir/input", workDir,
-      pruneThresholdBytes = pruneThresholdBytes)
-  }
+                    pruneThresholdBytes: Long = StreamRunner.SmallBytes)
+      : DataFrame =
+    StreamRunner.runOn(spark, docs, nSplits, "q134_inc_cc_stream")(
+      runClusters(spark, _, _, pruneThresholdBytes = pruneThresholdBytes))
 }

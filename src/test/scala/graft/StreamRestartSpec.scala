@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** Restart-from-checkpoint evidence (r14 verdict #6): every stream twin
   * elsewhere runs start-to-finish inside ONE query. Production
@@ -25,22 +25,14 @@ class StreamRestartSpec extends SparkSpec {
     * restarted query must therefore REPROCESS that batchId on top of
     * its own leftovers.
     */
-  private def crashAfter(inputDir: String, ckptDir: String, failAfter: Long)
+  private def crashAfter(work: String, failAfter: Long)
                         (body: (DataFrame, Long) => Unit): Unit = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(inputDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inputDir/split_*.parquet")
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
+    val e = intercept[StreamingQueryException](
+      graft.streaming.StreamRunner.drain(spark, s"$work/input", work) { (b, id) =>
         body(b, id)
         if (id == failAfter)
           throw new RuntimeException(s"injected crash after batch $id")
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val e = intercept[StreamingQueryException](q.awaitTermination())
+      })
     assert(e.getMessage.contains("injected crash") ||
       Option(e.getCause).exists(_.getMessage.contains("injected crash")),
       s"query died for the wrong reason: $e")
@@ -57,7 +49,7 @@ class StreamRestartSpec extends SparkSpec {
     val work = freshDir("restart_span")
     graft.streaming.SpanDedupStream
       .stageSplits(spark, docs, s"$work/input", nSplits = 4)
-    crashAfter(s"$work/input", s"$work/ckpt", failAfter = 1L) { (b, id) =>
+    crashAfter(work, failAfter = 1L) { (b, id) =>
       graft.streaming.SpanDedupStream
         .processBatch(spark, b, id, work, w = 8, nBuckets = 16,
           compactEvery = 8)
@@ -82,7 +74,7 @@ class StreamRestartSpec extends SparkSpec {
     graft.streaming.SpanDedupStream
       .stageSplits(spark, docs, s"$work/input", nSplits = 4)
     val prune = 64L * 1024 * 1024
-    crashAfter(s"$work/input", s"$work/ckpt", failAfter = 1L) { (b, id) =>
+    crashAfter(work, failAfter = 1L) { (b, id) =>
       graft.streaming.MinHashDedupStream
         .processBatch(spark, b, id, work, nBuckets = 16,
           pruneThresholdBytes = prune)
@@ -108,7 +100,7 @@ class StreamRestartSpec extends SparkSpec {
     val work = freshDir("restart_corpus")
     graft.streaming.SpanDedupStream
       .stageSplits(spark, docs, s"$work/input", nSplits = 4)
-    crashAfter(s"$work/input", s"$work/ckpt", failAfter = 1L) { (b, id) =>
+    crashAfter(work, failAfter = 1L) { (b, id) =>
       graft.streaming.CorpusPrepStream
         .processBatch(spark, b, id, work, nBuckets = 16, compactEvery = 8)
     }

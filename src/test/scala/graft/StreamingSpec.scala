@@ -290,17 +290,23 @@ class StreamingSpec extends SparkSpec {
     assert(pruned == expected.toSeq)
   }
 
-  test("q134 incremental CC stream equals batch CC over the q70 pair set") {
-    val docs = Tables.documents(spark, sfDir)
-    // batch ground truth: large-star/small-star CC over the full
-    // registered pair set, computed in one shot
+  /** Batch ground truth for q134: large-star/small-star CC over the
+    * full registered q70 pair set, computed in one shot.
+    */
+  private def q70BatchLabels(): Seq[(Long, Long)] = {
     val edges = Registry.byName("q70_docs_minhash_portable")
       .run(spark, sfDir)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val batchLabels = graft.ops.ConnectedComponents.clusters(edges)
+    val labels = graft.ops.ConnectedComponents.clusters(edges)
       .select(col("node").cast("long"), col("cluster_rep").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(batchLabels.nonEmpty, "fixture has no near-dup clusters")
+    assert(labels.nonEmpty, "fixture has no near-dup clusters")
+    labels
+  }
+
+  test("q134 incremental CC stream equals batch CC over the q70 pair set") {
+    val docs = Tables.documents(spark, sfDir)
+    val batchLabels = q70BatchLabels()
 
     def streamed(nSplits: Int): Seq[(Long, Long)] =
       graft.streaming.MinHashDedupStream.runClustersOn(spark, docs, nSplits)
@@ -312,6 +318,35 @@ class StreamingSpec extends SparkSpec {
     assert(streamed(3) == batchLabels)
     // and the fold is split-count invariant
     assert(streamed(2) == batchLabels)
+  }
+
+  test("q134 labels do not depend on arrival order: hash-ordered splits equal batch CC") {
+    val docs = Tables.documents(spark, sfDir)
+    val batchLabels = q70BatchLabels()
+
+    // split i holds the docs whose doc_id hashes to i, so ids interleave
+    // across arrivals and many pairs arrive higher id first
+    def streamed(nSplits: Int): Seq[(Long, Long)] = {
+      val work = java.nio.file.Files.createTempDirectory("q134_hash_order").toString
+      val input = new java.io.File(s"$work/input")
+      input.mkdirs()
+      for (i <- 0 until nSplits) {
+        val tmp = s"$work/stage_$i"
+        docs.where(pmod(hash(col("doc_id")), lit(nSplits)) === i)
+          .coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        val dest = new java.io.File(input, f"split_$i%03d.parquet")
+        java.nio.file.Files.move(part.toPath, dest.toPath)
+        assert(dest.setLastModified(1000000L + i * 60000L))
+      }
+      graft.streaming.MinHashDedupStream
+        .runClusters(spark, input.getPath, work)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+
+    assert(streamed(2) == batchLabels)
+    assert(streamed(4) == batchLabels)
   }
 
   test("q158 streaming dedup yield equals the batch q155 histogram") {

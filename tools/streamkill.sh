@@ -1,24 +1,28 @@
 #!/bin/bash
-# Round-15 verdict #1: REAL mid-task failure injection for the
-# incremental store streams. The four store families (q129 minhash,
-# q134 incremental CC, q101 span, q104 corpus-prep) run at sf0.1 under
-# local-cluster[4,4,4096] — real executor JVMs, real Netty shuffle —
-# while a killer loop SIGKILLs a random CoarseGrainedExecutorBackend
-# every KILL_EVERY seconds. Spark's task retry + stage resubmission
-# and the stores' batch= Overwrite partials must absorb every kill:
-# the run is then checked two ways —
+# Executor-SIGKILL injection for the split-file stream twins. The
+# streams run at sf0.1 under local-cluster[4,4,4096] (real executor
+# JVMs, real Netty shuffle) while a killer loop SIGKILLs a random
+# CoarseGrainedExecutorBackend every KILL_EVERY seconds. Spark's task
+# retry and stage resubmission, plus the streams' batch= Overwrite
+# partials, must absorb every kill. The run is then checked two ways:
 #   (1) tools/selfcheck.py: every dump hash-equal to its DuckDB batch
-#       oracle at sf0.1 (THE "equal to the uninterrupted batch" claim);
+#       oracle;
 #   (2) tools/dumpcmp.py: bit-equal to an uninterrupted local[32] run
 #       of the same tree.
-# SPARK_HOME/SPARK_SCALA_VERSION let the standalone worker's launcher
-# build executor commands from the /opt/spark distribution.
+# Exits non-zero when either check fails.
+#
+# The streams are the 13 registered queries that run on
+# graft.streaming.StreamRunner. The standalone workers launch their
+# executors from the Spark distribution at SPARK_HOME (which must be
+# set) and load the packaged jar, so run `sbt package` first.
 set -u
-cd /root/repo
-STREAMS=q101_span_dedup_stream,q104_corpus_prep_stream,q129_minhash_dedup_stream,q134_incremental_cc_stream
-SF=${SF:-/root/testdata/sf0.1}
+: "${SPARK_HOME:?set SPARK_HOME to a Spark distribution}"
+export SPARK_HOME
+cd "$(dirname "$0")/.."
+STREAMS=q101_span_dedup_stream,q104_corpus_prep_stream,q109_cms_stream,q111_ivf_stream,q122_bigram_lm_stream,q125_hll_stream,q129_minhash_dedup_stream,q134_incremental_cc_stream,q138_nb_stream,q142_dsir_stream,q146_mixture_stream,q179_url_frontier_stream,q182_warc_ingest_stream
+SF=${SF:-$HOME/testdata/sf0.1}
 JAR=target/scala-2.13/avkjobskillanalyticsspark_2.13-0.1.0.jar
-KILL_EVERY=${KILL_EVERY:-15}
+KILL_EVERY=${KILL_EVERY:-12}
 OUT=${OUT:-/tmp/killrun}
 REF=${REF:-/tmp/killref}
 
@@ -32,7 +36,7 @@ echo "errors.json (ref): $(cat "$REF"/errors.json)"
 echo "== local-cluster[4,4,4096] run with executor kills every ${KILL_EVERY}s =="
 rm -rf "$OUT"
 SPARK_GRAFT_ONLY=$STREAMS SPARK_GRAFT_CPUS=16 \
-  SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
+  SPARK_SCALA_VERSION=2.13 \
   SPARK_GRAFT_MASTER=local-cluster[4,4,4096] SPARK_GRAFT_JARS=$JAR \
   SPARK_GRAFT_EXEC_MEM=4g \
   sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 | grep "\[verify\]" &
@@ -59,6 +63,10 @@ echo "total kills: $NKILLS"
 echo "errors.json (killrun): $(cat "$OUT"/errors.json)"
 
 echo "== (1) DuckDB batch-oracle check of the killed run =="
-python3 tools/selfcheck.py $SF "$OUT"
+python3 tools/selfcheck.py "$SF" "$OUT"
+SELFCHECK=$?
 echo "== (2) dumpcmp vs uninterrupted local[32] =="
 python3 tools/dumpcmp.py "$REF" "$OUT"
+DUMPCMP=$?
+echo "selfcheck exit $SELFCHECK, dumpcmp exit $DUMPCMP"
+[ "$SELFCHECK" -eq 0 ] && [ "$DUMPCMP" -eq 0 ]
